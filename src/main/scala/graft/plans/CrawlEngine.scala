@@ -29,31 +29,28 @@ import graft.url.urlfns._
   *                        count. The fetch/defer SETS are identical either
   *                        way (the salted phase-1 top-K is provably a
   *                        superset of the exact per-host top-K).
-  * @param bloomFpp        seen-sketch false-positive rate
   * @param bloomMinSeen    below this seen-set size, skip the sketch entirely
-  *                        (the anti-join alone is cheaper). The sketch is
+  *                        (the exact probe alone is cheaper). The sketch is
   *                        built lazily from the FULL visited set the first
   *                        time this threshold is crossed (and on resume), then
   *                        maintained with per-epoch deltas — so it always
   *                        covers every visited URL (no-false-negative
   *                        invariant).
-  * @param bloomExpectedTotal broadcast-bloom design capacity; a crawl that
-  *                        outgrows it triggers an automatic rebuild from the
-  *                        full seen set at 2× the running estimate (FPP is
-  *                        restored; correctness never depended on it — the
-  *                        anti-join is authoritative)
-  * @param bloomShards     url-hash buckets for the sharded file-backed sketch
-  * @param bloomFileProbe  Some(true) forces the sharded shard-file probe
-  *                        (the 10^10-scale path: no monolithic broadcast),
-  *                        Some(false) forces the broadcast probe, None = auto
-  *                        by sketch size vs bloomBroadcastMaxBytes
+  * @param bloomExpectedTotal broadcast-bloom design capacity (1% FPP); a crawl
+  *                        that outgrows it triggers an automatic rebuild from
+  *                        the full seen set at 2× the running estimate (FPP
+  *                        is restored; correctness never depended on it — the
+  *                        exact check is authoritative). A bloom whose sizing
+  *                        exceeds 256 MiB is never built: a capacity over
+  *                        that cap leaves the sketch off, and a resize past it
+  *                        drops the sketch for the rest of the run, so the
+  *                        exact probe works alone (it scales by itself).
   * @param sketchKind      "bloom" (default) or "cuckoo" — the north_star's
   *                        cuckoo-filter fallback for the URL-seen set
   *                        ([[graft.sketch.SeenSketch]]: deletable membership;
   *                        saturation degrades to always-maybe, never a false
-  *                        negative). Cuckoo is broadcast-only — the shard-file
-  *                        store is bloom-format — so it forces the broadcast
-  *                        probe regardless of bloomFileProbe.
+  *                        negative). The broadcast size cap applies to the
+  *                        bloom only.
   * @param seenDedup       "bucketlocal" (default): the authoritative
   *                        candidates−seen check runs against the
   *                        [[graft.sketch.SeenUrlStore]] sorted shard files —
@@ -98,18 +95,14 @@ final case class CrawlConfig(
     numPartitions: Int = 32,
     saltBuckets: Int = 16,
     saltMinRows: Long = 100000L,
-    bloomFpp: Double = 0.01,
     bloomMinSeen: Long = 100000L,
     bloomExpectedTotal: Long = 10000000L,
-    bloomShards: Int = 32,
-    bloomFileProbe: Option[Boolean] = None,
     sketchKind: String = "bloom",
     seenDedup: String = "bucketlocal",
     seenStoreBuckets: Int = 0,
     seenCompactEvery: Int = 64,
     linksCompactFactor: Double = 3.0,
     linksCompactMinRows: Long = 1000000L,
-    bloomBroadcastMaxBytes: Long = 256L << 20,
     broadcastFetchMax: Long = 100000L,
     robotsBroadcastMax: Long = 100000L,
     depthPriority: Boolean = false,
@@ -180,6 +173,18 @@ object CrawlEngine {
   }
   val codePointOrdering: Ordering[String] =
     (a: String, b: String) => codePointCompare(a, b)
+
+  /** Seen-bloom false-positive rate. */
+  private val BloomFpp = 0.01
+
+  /** Largest bloom the engine broadcasts; above it the sketch stays off. */
+  private val BloomBroadcastMaxBytes = 256L << 20
+
+  /** True iff a bloom sized for `capacity` items fits the broadcast cap —
+    * checked before any sketch is allocated.
+    */
+  private[plans] def bloomFits(capacity: Long): Boolean =
+    BloomSketch.sizing(capacity, BloomFpp)._1 / 8 <= BloomBroadcastMaxBytes
 }
 
 /** Distributed level-synchronous BFS crawl over a pages table — the Spark
@@ -297,8 +302,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
   }
 
   /** candidates − seen, with the O-7b bloom fast path: `probe` adds a
-    * `maybe_seen` flag (broadcast-sketch expression or sharded shard-file
-    * lookup); !maybe_seen rows skip the authoritative check entirely.
+    * `maybe_seen` flag (broadcast bloom or cuckoo expression); !maybe_seen
+    * rows skip the authoritative check entirely.
     * `exactSeen` is the AUTHORITATIVE filter (rows NOT in the seen set):
     * either the bucket-local sorted-shard lookup (seenDedup=bucketlocal — no
     * O(seen) exchange) or the plain `left_anti` join (seenDedup=anti).
@@ -457,19 +462,29 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           // with the resume epoch so every later probe (upToEpoch ≥ s.epoch)
           // sees all of it.
           def syncStore(st: graft.sketch.SeenUrlStore, table: String): Unit = {
-            if (s.tables(table).totalRows > 0 && !st.validFor(hconf, s.epoch)) {
+            if (!st.validFor(hconf, s.epoch)) {
               st.clear(hconf)
-              st.writeDelta(store.readTable(s, table).select("url"), s.epoch)
+              if (s.tables(table).totalRows > 0)
+                st.writeDelta(store.readTable(s, table).select("url"), s.epoch)
             }
-            // bases compacted by a LATER, now-truncated timeline would hide
-            // the re-run's own deltas once it reaches the base's epoch —
-            // bases are derived state, drop the stale ones
+            // shards written by a LATER, now-truncated timeline belong to no
+            // committed snapshot: a stale base would hide the re-run's own
+            // deltas, and a stale delta in a bucket the re-run leaves empty
+            // would mark never-fetched urls as seen — drop both
             st.dropBasesAbove(hconf, s.epoch)
+            st.dropDeltasAbove(hconf, s.epoch)
           }
           syncStore(seenStore, "visited")
           syncStore(suppressedStore, "suppressed")
         }
       case None =>
+        // no committed snapshot ⇒ no committed state: shards left by an
+        // earlier, uncommitted run must not answer for this one
+        if (useSeenStore) {
+          val hconf = spark.sparkContext.hadoopConfiguration
+          seenStore.clear(hconf)
+          suppressedStore.clear(hconf)
+        }
         val seedDf = allowedSeeds
           .map(u => (u, graft.robots.Robots.hostKey(u), 0L))
           .toDF("url", "host", "priority")
@@ -515,42 +530,22 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // Incrementally-maintained seen sketch (O-7b). Activation is LAZY: the
     // first epoch where the seen estimate crosses bloomMinSeen, the sketch is
     // built from the FULL visited-so-far ∪ this epoch's fetch (also the
-    // resume path — file shards are re-merged idempotently); every later
-    // epoch folds in only the fetch delta. Invariant: whenever the probe is
-    // active, the sketch covers every URL in the authoritative seen set — no
-    // false negatives, so the dedup split is exact.
+    // resume path); every later epoch folds in only the fetch delta.
+    // Invariant: whenever the probe is active, the sketch covers every URL in
+    // the authoritative seen set — no false negatives, so the dedup split is
+    // exact.
     //
-    // Two physical forms:
-    //  - broadcast: one in-memory sketch, per-partition build + treeAggregate
-    //    merge of the delta (north_star path), rebroadcast + destroyed per
-    //    epoch. Right up to ~bloomBroadcastMaxBytes.
-    //  - sharded files (the 10^10 path): url-hash-bucketed shard files built
-    //    and probed executor-side (BloomShardStore) — the full sketch never
-    //    exists in one JVM and probes touch only each task's buckets.
+    // One physical form: an in-memory sketch, per-partition build +
+    // treeAggregate merge of the delta (north_star path), rebroadcast +
+    // destroyed per epoch. A bloom is built only while its sizing fits the
+    // broadcast cap; above it the exact bucket-local probe works alone (it
+    // is exchange-free and scales by itself), so an over-cap capacity never
+    // activates the sketch and a resize past the cap drops it for the rest
+    // of the run.
     require(config.sketchKind == "bloom" || config.sketchKind == "cuckoo",
       s"unknown sketchKind '${config.sketchKind}' (bloom|cuckoo)")
     val useCuckoo = config.sketchKind == "cuckoo"
-    val (sketchBits, sketchHashes) =
-      BloomSketch.sizing(config.bloomExpectedTotal, config.bloomFpp)
-    val fileProbe = !useCuckoo && config.bloomFileProbe
-      .getOrElse(sketchBits / 8 > config.bloomBroadcastMaxBytes)
     val nShuffle = spark.sessionState.conf.numShufflePartitions
-    val shardStore =
-      if (fileProbe) {
-        // keep shards ≤ ~16 MiB regardless of scale (10^10 urls ⇒ ~2^10
-        // buckets of ~12 MB — BASELINE.md's accounting): a probe task loads
-        // one shard, so shard size bounds per-task memory, not total size.
-        // When that cap allows it, use the session's shuffle-partition count
-        // instead: the sketch's bucket function is Spark's HashPartitioning
-        // id (same as the seen store's), so matching counts give the sketch
-        // probe — and the exact probe behind it — ZERO exchanges on the
-        // already-hash-partitioned candidate frame.
-        val desired = math.max(config.bloomShards,
-          ((sketchBits / 8) / (16L << 20) + 1).toInt)
-        val shards = if (desired <= nShuffle) nShuffle else desired
-        new graft.sketch.BloomShardStore(s"$warehouse/sketch", shards,
-          ((sketchBits / shards + 63) >> 6) << 6, sketchHashes)
-      } else null
     var seenSketch: BloomSketch = null
     var seenCuckoo: graft.sketch.SeenSketch = null
     var sketchActive = false
@@ -564,8 +559,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         val rdd0 = urls.select("url").as[String].rdd
         if (rdd0.getNumPartitions > 8) rdd0.coalesce(8) else rdd0
       }
-      if (fileProbe) shardStore.mergeDelta(urls.select("url"))
-      else if (useCuckoo) {
+      if (useCuckoo) {
         if (seenCuckoo == null)
           seenCuckoo = new graft.sketch.SeenSketch(config.bloomExpectedTotal)
         // a saturating merge degrades the sketch to always-maybe (every row
@@ -574,8 +568,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           graft.sketch.SeenSketch.build(deltaRdd, config.bloomExpectedTotal))
       } else {
         if (seenSketch == null)
-          seenSketch = BloomSketch.forExpected(sketchCapacity, config.bloomFpp)
-        seenSketch.merge(BloomSketch.build(deltaRdd, sketchCapacity, config.bloomFpp))
+          seenSketch = BloomSketch.forExpected(sketchCapacity, CrawlEngine.BloomFpp)
+        seenSketch.merge(
+          BloomSketch.build(deltaRdd, sketchCapacity, CrawlEngine.BloomFpp))
       }
     }
 
@@ -798,18 +793,21 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // idempotent and every non-final epoch stops paying the merge's
       // wall-clock.) The vars it mutates are read only after the Await.
       val sketchMergeF: Future[Unit] = Future {
-        if (sketchActive && !fileProbe && !useCuckoo && seenCountNow > sketchCapacity) {
+        if (sketchActive && !useCuckoo && seenCountNow > sketchCapacity) {
           // outgrown: a bloom at >1× its design load answers maybe for nearly
-          // everything (correct — the anti-join is authoritative — but it
+          // everything (correct — the exact check is authoritative — but it
           // stops pruning). Rebuild from the FULL seen set at 2× the current
-          // estimate, restoring the configured FPP. The sharded file sketch
-          // has fixed geometry (the 10^10 path is pre-sized per BASELINE.md)
-          // and cuckoo has its own degrade-to-maybe story.
+          // estimate, restoring the FPP — or, when that size no longer fits
+          // the broadcast cap, drop the sketch; the capacity stays over the
+          // cap, so it never reactivates. Cuckoo has its own degrade-to-maybe
+          // story.
           sketchCapacity = math.max(seenCountNow * 2, sketchCapacity * 2)
           seenSketch = null
-          mergeIntoSketch(visitedAll)
+          if (CrawlEngine.bloomFits(sketchCapacity)) mergeIntoSketch(visitedAll)
+          else sketchActive = false
         } else if (sketchActive) mergeIntoSketch(fetchNow) // maintain full coverage
-        else if (seenCountNow >= config.bloomMinSeen) {
+        else if (seenCountNow >= config.bloomMinSeen &&
+          (useCuckoo || CrawlEngine.bloomFits(sketchCapacity))) {
           mergeIntoSketch(visitedAll) // first activation: cover ALL seen urls
           sketchActive = true
         }
@@ -819,7 +817,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       Await.result(sketchMergeF, scala.concurrent.duration.Duration.Inf)
       lap("sketch_merge_wait")
       val bloomBcast =
-        if (candidatesIn > 0 && sketchActive && !fileProbe && !useCuckoo)
+        if (candidatesIn > 0 && sketchActive && !useCuckoo)
           spark.sparkContext.broadcast(seenSketch)
         else null
       val cuckooBcast =
@@ -828,15 +826,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         else null
       val probe: Option[DataFrame => DataFrame] =
         if (!sketchActive) None
-        else if (fileProbe)
-          // aligned (shard count == the candidate exchange's partition
-          // count, same HashPartitioning bucket function): the sketch probe
-          // consumes the candidates' own exchange and PRESERVES it for the
-          // exact probe behind it — the 10^10 configuration keeps the
-          // zero-exchange chain. Misaligned counts pay one routing exchange;
-          // correctness never depends on it.
-          Some(df => shardStore.probe(df, "url",
-            assumeDistributed = shardStore.numBuckets == nShuffle))
         else if (useCuckoo)
           Some(df => df.withColumn("maybe_seen", cuckoo_might_contain(cuckooBcast, col("url"))))
         else Some(df => df.withColumn("maybe_seen", bloom_might_contain(bloomBcast, col("url"))))
@@ -849,15 +838,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           // the shard files for this epoch are written by seenStoreF — they
           // must be on disk before the probe job launches
           Await.result(seenStoreF, scala.concurrent.duration.Duration.Inf)
-          // candidates flow out of the groupBy/distinct url exchange, the
-          // broadcast sketch probe is narrow, and the file-probe preserves
-          // the partitioning when ITS shard count matches — so when the
-          // store's bucket count matches the exchange's partitioning the
-          // probe needs NO exchange of its own. Alignment is a perf hint
-          // only; the probe is correct under any distribution.
-          val aligned = seenStore.numBuckets == nShuffle &&
-            (!fileProbe || shardStore.numBuckets == nShuffle)
-          seenStore.filterUnseen(df, "url", epoch, assumeDistributed = aligned)
+          // candidates flow out of the groupBy/distinct url exchange and the
+          // broadcast sketch probe is narrow — so when the store's bucket
+          // count matches the exchange's partitioning the probe needs NO
+          // exchange of its own. Alignment is a perf hint only; the probe is
+          // correct under any distribution.
+          seenStore.filterUnseen(df, "url", epoch,
+            assumeDistributed = seenStore.numBuckets == nShuffle)
         } else { df =>
           df.join(visitedAll.select("url"), Seq("url"), "left_anti")
         }
@@ -876,8 +863,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
               // bucket-local subtraction of suppressed(≤ e) — the store's
               // delta for THIS epoch is on disk (sStateF awaited above). The
               // frame reaching here is always bucket-pure per partition
-              // (either it kept the candidates' url hash partitioning, or a
-              // store/sketch probe routed it by the same bucket function),
+              // (either it kept the candidates' url hash partitioning, or the
+              // seen-store probe routed it by the same bucket function),
               // so the probe never needs its own exchange — this replaces
               // the left_anti that re-shuffled the CUMULATIVE suppressed set
               // every robots epoch.

@@ -39,16 +39,15 @@ import graft.util.SerializableHadoopConf
   *    dense fraction of its size (the regime where reading the shard once is
   *    optimal anyway).
   *
-  * Exact resume falls out of the epoch-suffixed file names: a probe during
-  * epoch e reads only files with epoch ≤ e, so deltas left behind by a
-  * crashed/truncated later epoch are invisible, and the re-run of an epoch
-  * deterministically overwrites its own files (same contract as the snapshot
-  * store's data dirs). Task retries are idempotent for the same reason.
-  * Compacted BASE files (`c<N>.seen`) are derived state: a resume that
-  * truncates snapshots back past a compaction must drop the stale base
-  * ([[dropBasesAbove]]) so the re-run's deltas are not hidden behind an
-  * old-timeline base; [[compact]] additionally rebuilds (never folds) a base
-  * whose epoch equals its own target, so a surviving stale base is
+  * Exact resume rests on the epoch-suffixed file names: a probe during
+  * epoch e reads only files with epoch ≤ e, and task retries overwrite their
+  * own files (same contract as the snapshot store's data dirs). A resume
+  * that truncates snapshots drops every shard above the resumed epoch
+  * ([[dropDeltasAbove]], [[dropBasesAbove]]): the re-run of an epoch
+  * rewrites only the buckets its own delta touches, and compacted BASE
+  * files (`c<N>.seen`) are derived state that would hide the re-run's
+  * deltas. [[compact]] additionally rebuilds (never folds) a base whose
+  * epoch equals its own target, so a surviving stale base is
   * deterministically overwritten rather than consulted forever.
   *
   * A `_meta.json` records the bucket count and the highest epoch the store
@@ -104,14 +103,12 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
 
   /** Advance the covered-epoch watermark (atomic tmp+rename; driver-side).
     * Called by [[writeDelta]]; call directly for an epoch whose delta is
-    * empty (no shard files written) so coverage shows no gap.
+    * empty (no shard files written) so coverage shows no gap. Throws on a
+    * bucket-count mismatch ([[watermark]]).
     */
   def markEpoch(conf: Configuration, epoch: Int): Unit = {
     val fs = metaPath.getFileSystem(conf)
-    val maxE = meta(conf) match {
-      case Some((nb, m)) if nb == numBuckets => math.max(m, epoch)
-      case _ => epoch
-    }
+    val maxE = watermark(conf).fold(epoch)(math.max(_, epoch))
     fs.mkdirs(new Path(dir))
     val tmp = new Path(dir, s".tmp-meta-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = fs.create(tmp, true)
@@ -121,6 +118,17 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
     if (!fs.rename(tmp, metaPath))
       throw new java.io.IOException(s"meta publish failed for $metaPath")
   }
+
+  /** The recorded covered-epoch watermark, if any. Throws when the recorded
+    * bucket count differs from this instance's: writing on would leave a
+    * mixed-bucket shard set under a meta that validates it.
+    */
+  private def watermark(conf: Configuration): Option[Int] =
+    meta(conf).map { case (nb, maxE) =>
+      if (nb != numBuckets) throw new IllegalStateException(
+        s"$dir holds $nb buckets, not $numBuckets: clear() it before writing")
+      maxE
+    }
 
   /** Delete the whole store (rebuild-from-parquet path: stale mis-bucketed
     * shards must not survive a rebuild under a different bucket count).
@@ -134,10 +142,22 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
   /** Drop compacted base files `c<E>.seen` with E > `epoch` (driver-side).
     * Called on resume: a base compacted on a LATER, now-truncated timeline
     * would otherwise hide the re-run's own deltas once the re-run reaches
-    * the base's epoch. Bases are derived state (deltas are never deleted),
-    * so dropping them is always safe.
+    * the base's epoch. Bases are derived state (deltas are never deleted by
+    * compaction), so dropping them is always safe.
     */
-  def dropBasesAbove(conf: Configuration, epoch: Int): Unit = {
+  def dropBasesAbove(conf: Configuration, epoch: Int): Unit =
+    dropShardsAbove(conf, 'c', epoch)
+
+  /** Drop delta files `e<E>.seen` with E > `epoch` (driver-side). Called on
+    * resume: deltas of a truncated timeline belong to no committed snapshot,
+    * and the re-run of an epoch rewrites only the buckets its own delta
+    * touches — a stale delta left in any other bucket would answer "seen"
+    * for a url the new timeline never fetched.
+    */
+  def dropDeltasAbove(conf: Configuration, epoch: Int): Unit =
+    dropShardsAbove(conf, 'e', epoch)
+
+  private def dropShardsAbove(conf: Configuration, kind: Char, epoch: Int): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return
@@ -145,7 +165,7 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
       if (d.isDirectory && d.getPath.getName.startsWith("bucket="))
         fs.listStatus(d.getPath).foreach { f =>
           val name = f.getPath.getName
-          if (name.startsWith("c") && name.endsWith(".seen") &&
+          if (name.charAt(0) == kind && name.endsWith(".seen") &&
             scala.util.Try(name.substring(1).stripSuffix(".seen").toInt)
               .toOption.exists(_ > epoch))
             fs.delete(f.getPath, false)
@@ -163,6 +183,7 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
     val (d, nb) = (dir, numBuckets)
     val sconf = new SerializableHadoopConf(
       urls.sparkSession.sparkContext.hadoopConfiguration)
+    watermark(sconf.value) // bucket-count check before any shard is written
     urls
       .withColumn("__b", bucketCol(col(urls.columns.head)))
       .repartition(nb, col("__b"))

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Extra benchmark main (guide §1.4): per-query isolation with the noop sink
@@ -7,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * the computation, not the sink — with N reps and per-rep steal jiffies.
   * The frozen `graft.Bench` methodology (count() per query, single pass)
   * remains the driver artifact; this main exists for optimization evidence
-  * only (OPTIMIZATION_r06.md).
+  * only (OPTIMIZATION_r06.md). A failing warm lap prints a
+  * `noop_query_warm` line with its error; a failing rep shows as null in
+  * `reps`, never feeds `best_sec`, and adds an `error` field to the line.
   *
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt -batch "runMain graft.tools.BenchExtra <reps> [q1,q2,...]"
@@ -81,6 +85,8 @@ object BenchExtra {
     (sec, scheduled)
   }
 
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private def stealJiffies(): Long =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
@@ -109,26 +115,36 @@ object BenchExtra {
     graft.SparkEntry.warmCaches(spark, sfDir)
     val queries = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.isEmpty || only.contains(q._1))
+    // one noop-sink run: None, or the failure it threw (reported, never timed)
+    def runNoop(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[String] =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+      catch { case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+    def json(s: String): String = jsonMapper.writeValueAsString(s)
     // one warm lap (JIT/codegen), then the measured reps
     queries.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"warm:$name")
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      runNoop(fn).foreach { err =>
+        println(s"""{"metric":"noop_query_warm","name":"$name","error":${json(err)}}""")
+      }
     }
     queries.foreach { case (name, fn) =>
-      val times = (1 to reps).map { i =>
+      val runs = (1 to reps).map { i =>
         spark.sparkContext.setJobDescription(s"bench:$name:$i")
         val s0 = stealJiffies()
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        val err = runNoop(fn)
         val sec = (System.nanoTime() - t0) / 1e9
-        (sec, stealJiffies() - s0)
+        (err.toLeft(sec), stealJiffies() - s0)
       }
-      val best = times.minBy(_._1)
-      val all = times.map(t => f"${t._1}%.3f").mkString("[", ",", "]")
-      val steals = times.map(_._2).mkString("[", ",", "]")
-      println(f"""{"metric":"noop_query","name":"$name","best_sec":${best._1}%.3f,"reps":$all,"steal_jiffies":$steals}""")
+      // failed reps never feed best_sec; they show as null in reps
+      val ok = runs.flatMap(_._1.toOption)
+      val best = if (ok.isEmpty) "null" else f"${ok.min}%.3f"
+      val all = runs.map(_._1.fold(_ => "null", t => f"$t%.3f")).mkString("[", ",", "]")
+      val steals = runs.map(_._2).mkString("[", ",", "]")
+      val error = runs.flatMap(_._1.left.toOption).headOption
+        .map(e => s""","error":${json(e)}""").getOrElse("")
+      println(s"""{"metric":"noop_query","name":"$name","best_sec":$best,"reps":$all,"steal_jiffies":$steals$error}""")
     }
     spark.stop()
   }

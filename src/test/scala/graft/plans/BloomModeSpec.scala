@@ -19,26 +19,37 @@ class BloomModeSpec extends AnyFunSuite {
   private val domain = "example.com"
   private val n = 24
 
-  /** Chain 0→1→…→n-1→0, every page also back-links to pages 0 and 1: one new
-    * fetch per epoch, and every epoch re-proposes the earliest URLs.
-    */
-  private def cyclicPages: DataFrame = {
+  private val seed = s"https://$domain/p/0"
+
+  /** n pages on one host; page i links to `links(i)`. */
+  private def sitePages(links: Int => Seq[Int]): DataFrame = {
     def url(i: Int) = s"https://$domain/p/$i"
     (0 until n).map { i =>
-      val html =
-        s"""<a href="${url((i + 1) % n)}">next</a>
-           |<a href="${url(0)}">home</a><a href="${url(1)}">one</a>""".stripMargin
+      val html = links(i).map(j => s"""<a href="${url(j)}">$j</a>""").mkString("\n")
       val bytes = html.getBytes("UTF-8")
       (url(i), new java.sql.Timestamp(1700000000000L), bytes,
         graft.html.HtmlExtract.extractText(bytes), "en")
     }.toDF("url", "warc_ts", "html", "text", "lang")
   }
 
-  private def crawl(cfg: CrawlConfig): (Seq[(Int, String)], Seq[String]) = {
-    val wh = Files.createTempDirectory("graft-bloommode-").toString
-    val r = new CrawlEngine(spark, cfg).run(cyclicPages, s"https://$domain/p/0", wh)
+  /** Chain 0→1→…→n-1→0, every page also back-links to pages 0 and 1: one new
+    * fetch per epoch, and every epoch re-proposes the earliest URLs.
+    */
+  private def cyclicPages: DataFrame = sitePages(i => Seq((i + 1) % n, 0, 1))
+
+  /** Fan-out: page i links to 3i+1..3i+3 (mod n) and back to 0 — the frontier
+    * outgrows a per-host budget, so the budget decides each epoch's fetch.
+    */
+  private def fanPages: DataFrame =
+    sitePages(i => Seq((3 * i + 1) % n, (3 * i + 2) % n, (3 * i + 3) % n, 0))
+
+  private def collected(r: CrawlResult): (Seq[(Int, String)], Seq[String]) =
     (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
       r.links.select("url").orderBy("url").as[String].collect().toSeq)
+
+  private def crawl(cfg: CrawlConfig): (Seq[(Int, String)], Seq[String]) = {
+    val wh = Files.createTempDirectory("graft-bloommode-").toString
+    collected(new CrawlEngine(spark, cfg).run(cyclicPages, seed, wh))
   }
 
   private lazy val plain = crawl(CrawlConfig(domain, numPartitions = 4,
@@ -98,6 +109,25 @@ class BloomModeSpec extends AnyFunSuite {
     assert(got == plain)
   }
 
+  test("truncate-resume under a changed budget drops the truncated " +
+    "timeline's seen deltas") {
+    // the re-run of epoch k+1 fetches fewer urls than the truncated
+    // timeline did, so its delta leaves buckets empty where the old
+    // timeline's e(k+1) shards still sit — those must not mark urls the new
+    // timeline never fetched as seen
+    val (budgetA, budgetB, k) = (4, 1, 2)
+    def run(wh: String, budget: Int, maxEpochs: Int = Int.MaxValue) =
+      new CrawlEngine(spark, CrawlConfig(domain, budget = Some(budget),
+        numPartitions = 4, maxEpochs = maxEpochs)).run(fanPages, seed, wh)
+    val wh = Files.createTempDirectory("graft-budgetresume-").toString
+    run(wh, budgetA, maxEpochs = 6)
+    new graft.snapshot.SnapshotStore(spark, wh).truncateAfter(k)
+    val got = collected(run(wh, budgetB))
+    val ref = Files.createTempDirectory("graft-budgetresume-ref-").toString
+    run(ref, budgetA, maxEpochs = k + 1)
+    assert(got == collected(run(ref, budgetB)))
+  }
+
   test("warm-up: bloom activating mid-crawl never re-visits early URLs") {
     // activates around epoch 3; pages 0..2 were fetched before activation
     val (trace, links) = crawl(CrawlConfig(domain, numPartitions = 4,
@@ -123,20 +153,21 @@ class BloomModeSpec extends AnyFunSuite {
     assert(cap > 8, s"sketch capacity never grew: $cap")
   }
 
-  test("sharded shard-file probe ≡ broadcast probe ≡ plain anti-join") {
-    val wh = Files.createTempDirectory("graft-bloomfile-").toString
+  test("over-cap bloom sizing leaves the sketch off: the exact store probe " +
+    "alone ≡ plain anti-join") {
+    // 2^31 expected urls ⇒ a ~2.4 GiB bloom, far over the broadcast cap: no
+    // sketch is ever allocated and the exact bucket-local probe works alone
+    assert(!CrawlEngine.bloomFits(1L << 31))
+    assert(CrawlEngine.bloomFits(CrawlConfig(domain).bloomExpectedTotal))
+    val wh = Files.createTempDirectory("graft-bloomovercap-").toString
     val r = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
-      bloomMinSeen = 4, bloomExpectedTotal = 1024, bloomShards = 8,
-      bloomFileProbe = Some(true)))
-      .run(cyclicPages, s"https://$domain/p/0", wh)
-    val trace = r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq
-    val links = r.links.select("url").as[String].collect().sorted.toSeq
-    assert((trace, links) == plain)
-    // the sketch lives as per-bucket files, built executor-side
-    val shardDir = new java.io.File(s"$wh/sketch")
-    val shards = Option(shardDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".bloom"))
-    assert(shards.nonEmpty, "no shard files written")
+      bloomMinSeen = 4, bloomExpectedTotal = 1L << 31))
+      .run(cyclicPages, seed, wh)
+    assert(collected(r) == plain)
+    val cap = new graft.snapshot.SnapshotStore(spark, wh)
+      .latest().get.metrics("sketch_capacity")
+    assert(cap == 0L, s"sketch active at capacity $cap")
+    assert(!new java.io.File(s"$wh/sketch").exists(), "sketch files written")
   }
 
   test("cuckoo seen-sketch probe ≡ plain anti-join (north_star fallback wired)") {
@@ -154,20 +185,5 @@ class BloomModeSpec extends AnyFunSuite {
     val (trace, links) = crawl(CrawlConfig(domain, numPartitions = 4,
       sketchKind = "cuckoo", bloomMinSeen = 4, bloomExpectedTotal = 1))
     assert((trace, links) == plain)
-  }
-
-  test("BloomShardStore: no false negatives across delta merges; misses stay mostly false") {
-    val dir = Files.createTempDirectory("graft-shardstore-").toString
-    val store = new graft.sketch.BloomShardStore(dir, 8, 64L * 64, 4)
-    val d1 = (0 until 300).map(i => s"https://a.com/$i").toDF("url")
-    val d2 = (300 until 600).map(i => s"https://a.com/$i").toDF("url")
-    store.mergeDelta(d1)
-    store.mergeDelta(d2)
-    val probed = store.probe((0 until 600).map(i => s"https://a.com/$i").toDF("url"), "url")
-    assert(probed.filter(!probed("maybe_seen")).count() == 0, "false negative")
-    val misses = store.probe(
-      (0 until 500).map(i => s"https://other.org/$i").toDF("url"), "url")
-    val fp = misses.filter(misses("maybe_seen")).count()
-    assert(fp < 100, s"FPP implausibly high: $fp/500")
   }
 }

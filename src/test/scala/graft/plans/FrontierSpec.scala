@@ -47,18 +47,20 @@ class FrontierSpec extends AnyFunSuite {
     (node.get("domain").asText(), budget, seeds, depthPriority)
   }
 
-  private def runScenario(scenario: String): (CrawlResult, String) = {
+  private def runScenario(scenario: String,
+      tweak: CrawlConfig => CrawlConfig = identity): (CrawlResult, String) = {
     val (domain, budget, seeds, depthPriority) = config(scenario)
     val wh = Files.createTempDirectory(s"graft-$scenario-").toString
-    val engine = new CrawlEngine(spark,
+    val engine = new CrawlEngine(spark, tweak(
       CrawlConfig(domain = domain, budget = budget, numPartitions = 4,
-        depthPriority = depthPriority))
+        depthPriority = depthPriority)))
     val result = engine.run(loadPages(scenario), seeds, wh)
     (result, wh)
   }
 
-  private def checkScenario(scenario: String): Unit = {
-    val (result, wh) = runScenario(scenario)
+  private def checkScenario(scenario: String,
+      tweak: CrawlConfig => CrawlConfig = identity): Unit = {
+    val (result, wh) = runScenario(scenario, tweak)
     // trace: exact sequence under the §A.1 canonical serialization
     val gotTrace = result.trace.select("url").as[String].collect().toSeq
     assert(gotTrace == resLines(s"/sites/$scenario/trace.txt"), s"$scenario trace")
@@ -120,6 +122,13 @@ class FrontierSpec extends AnyFunSuite {
       .map(_.split("\t")(0).toInt).max >= 4)
   }
 
+  test("salted two-phase politeness (saltMinRows = 0): budget2, combo and " +
+    "delay match their goldens") {
+    // every epoch takes the (host, salt) pre-ranking + exact second phase;
+    // the fetch/defer sets must equal the single-phase ones the goldens pin
+    Seq("budget2", "combo", "delay").foreach(checkScenario(_, _.copy(saltMinRows = 0L)))
+  }
+
   test("delayfloor: crawl-delay nan (no cap), inf (cap 1), and a delay where " +
     "Python floordiv differs from floor(window/d) by one") {
     checkScenario("delayfloor")
@@ -170,7 +179,7 @@ class FrontierSpec extends AnyFunSuite {
 
   test("fuzz sites: seeded-random graphs with mixed budget/robots/priority/" +
     "seed-count, messy href spellings, and NBSP attribute separators") {
-    Seq("fuzz1", "fuzz2", "fuzz3", "fuzz4", "fuzz5", "fuzz6").foreach(checkScenario)
+    Seq("fuzz1", "fuzz2", "fuzz3", "fuzz4", "fuzz5", "fuzz6").foreach(checkScenario(_))
   }
 
   test("saveLinksSharded: part files concatenate to the parity links.txt bytes") {

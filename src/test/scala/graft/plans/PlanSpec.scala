@@ -160,37 +160,28 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("aligned sketch + seen-store probes add no exchange: the dedup chain " +
-    "keeps ONE shuffle (the distinct's) in the fileProbe configuration") {
+  test("aligned seen-store probe adds no exchange: the dedup chain keeps " +
+    "ONE shuffle (the distinct's)") {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    // stores bucketed by the session's shuffle-partition count — candidates
+    // store bucketed by the session's shuffle-partition count — candidates
     // leave their distinct exchange partitioned pmod(hash(url), n), which is
-    // both stores' bucket function, so neither probe may add an exchange.
-    // This is the 10^10 configuration (sharded file sketch + exact store).
+    // the store's bucket function, so the probe may not add an exchange
     val nb = spark.sessionState.conf.numShufflePartitions
     val seen = new graft.sketch.SeenUrlStore(
       Files.createTempDirectory("graft-plan-seen-").toString + "/s", nb)
-    val sketch = new graft.sketch.BloomShardStore(
-      Files.createTempDirectory("graft-plan-bloom-").toString, nb, 64L * 64, 4)
     val seeded = {
       import spark.implicits._
       (0 until 50).map(i => s"https://example.com/d/$i").toDF("url")
     }
     seen.writeDelta(seeded, 0)
-    sketch.mergeDelta(seeded)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false") // inspectable plan
     try {
       val cand = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(concat(lit("https://example.com/d/"), col("doc_id")).as("url"))
         .distinct()
-      // the engine's dedupAgainst shape: sketch flag → split → exact probe
-      val flagged = sketch.probe(cand, "url", assumeDistributed = true)
-      val next = flagged.filter(!col("maybe_seen")).drop("maybe_seen")
-        .union(seen.filterUnseen(
-          flagged.filter(col("maybe_seen")).drop("maybe_seen"), "url", 0,
-          assumeDistributed = true))
+      val next = seen.filterUnseen(cand, "url", 0, assumeDistributed = true)
       val exchanges = next.queryExecution.executedPlan
         .collect { case e: ShuffleExchangeExec => e }
       assert(exchanges.size == 1,

@@ -178,6 +178,27 @@ class SeenUrlStoreSpec extends AnyFunSuite {
     assert(store.filterUnseen(urls(0, 400).toDF("url"), "url", 1).count() == 0)
   }
 
+  test("dropDeltasAbove removes later-timeline deltas; deltas and bases at " +
+    "or below answer exactly") {
+    val store = freshStore(buckets = 2)
+    store.writeDelta(urls(0, 200).toDF("url"), 0)
+    store.writeDelta(urls(200, 200).toDF("url"), 1)
+    store.compact(spark, 1) // c1 = e0 ∪ e1
+    store.writeDelta(urls(400, 200).toDF("url"), 2)
+    store.writeDelta(urls(600, 200).toDF("url"), 3)
+    store.dropDeltasAbove(spark.sparkContext.hadoopConfiguration, 1)
+    val names = new java.io.File(store.dir).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().map(_.getName)).filter(_.endsWith(".seen")).toSet
+    assert(names == Set("e0.seen", "e1.seen", "c1.seen"), names)
+    val probe = urls(0, 800).toDF("url")
+    def unseen(upTo: Int) =
+      store.filterUnseen(probe, "url", upTo).as[String].collect().toSet
+    // a probe reading up to epoch 3 sees only what is at or below epoch 1
+    assert(unseen(3) == urls(400, 400).toSet)
+    assert(unseen(1) == urls(400, 400).toSet) // through the base
+    assert(unseen(0) == urls(200, 600).toSet) // through delta e0 alone
+  }
+
   test("meta watermark gates resume: bucket-count or coverage mismatch " +
     "invalidates the store") {
     val store = freshStore(buckets = 4)
@@ -190,6 +211,12 @@ class SeenUrlStoreSpec extends AnyFunSuite {
     assert(store.validFor(conf, 3))
     val other = new SeenUrlStore(store.dir, 8) // same dir, other bucket count
     assert(!other.validFor(conf, 0), "bucket-count mismatch must invalidate")
+    // writing under another bucket count throws instead of stamping a fresh
+    // meta that would validate the mixed-bucket shard set
+    intercept[IllegalStateException](other.markEpoch(conf, 4))
+    intercept[IllegalStateException](other.writeDelta(urls(0, 10).toDF("url"), 4))
+    assert(store.validFor(conf, 3) && !store.validFor(conf, 4),
+      "a mismatched write moved the meta")
     other.clear(conf)
     assert(!store.hasAnyData(conf) && !store.validFor(conf, 0))
   }
